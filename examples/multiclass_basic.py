@@ -1,5 +1,5 @@
 """One-vs-rest / one-vs-one multiclass distribution (reference
-examples/multiclass/basic_usage.py): one Spark task per class (pair)."""
+examples/multiclass/basic_usage.py): one grid task per class (pair)."""
 
 from pyspark.sql import SparkSession
 

@@ -11,6 +11,11 @@ import copy
 import inspect
 from typing import Any
 
+# module level, not inside score(): run_tasks pickles these classes by
+# value, and a relative import in a method then resolves on the worker,
+# which may not have skdist_spark installed
+from .metrics import accuracy_score, r2_score
+
 
 class BaseEstimator:
     """get_params/set_params via __init__ signature introspection."""
@@ -60,8 +65,6 @@ class ClassifierMixin:
     _estimator_type = "classifier"
 
     def score(self, X, y) -> float:
-        from .metrics import accuracy_score
-
         return accuracy_score(y, self.predict(X))
 
 
@@ -69,8 +72,6 @@ class RegressorMixin:
     _estimator_type = "regressor"
 
     def score(self, X, y) -> float:
-        from .metrics import r2_score
-
         return r2_score(y, self.predict(X))
 
 

@@ -3,15 +3,23 @@
 The reference's core trick (skdist/distribute/search.py:410-437,
 ensemble, multiclass, eliminate — all variants of it) is: enumerate a
 grid of small independent training tasks, broadcast the training data
-once, run one task per Spark task, collect small results.
+once, run the tasks as Spark tasks, collect small results.
 
-This rebuild expresses that Spark-first: tasks become rows of a
-DataFrame, range-partitioned one-task-per-partition, executed through
-``mapInPandas`` (Arrow-batched), with results returned as pickled
-payloads in a binary column. Compared to the reference's
-``sc.parallelize(...).map``, the task set is visible to Catalyst/AQE,
-results stream back through Arrow, and the same code path works on
-Spark Connect clusters where raw RDDs are unavailable.
+This rebuild expresses that Spark-first: the grid is a one-row-per-
+partition DataFrame executed through ``mapInPandas`` (Arrow-batched),
+with results returned as pickled payloads in a binary column. Compared
+to the reference's ``sc.parallelize(...).map``, the task set is visible
+to Catalyst/AQE, results stream back through Arrow, and the same code
+path works on Spark Connect clusters where raw RDDs are unavailable.
+
+Packing departs from the reference, which runs one Spark task per
+grid task (base.py:53). Each Python Spark task carries a fixed cost of
+tens of milliseconds, far above a small model fit: on a 4-core x86-64
+host (local[4]), 37 no-op tasks took 2.4-2.6 s one per partition and
+0.3 s packed into 4. So ``partitions="auto"`` runs
+``min(n_tasks, defaultParallelism)`` Spark tasks, and partition ``p``
+runs grid tasks ``p, p+n, p+2n, ...`` (stride, not contiguous blocks,
+so slow candidates of a candidate-major grid spread across cores).
 
 Scale posture: the collected payloads are (score, params, small
 model) tuples — never training data — so driver memory stays O(#tasks),
@@ -49,10 +57,21 @@ def resolve_spark(sc) -> tuple[Any | None, Any | None]:
 
 
 def parse_partitions(partitions, n_tasks: int) -> int:
-    """'auto' -> one partition per task (reference base.py:53 behavior)."""
-    if partitions in (None, "auto"):
-        return max(1, n_tasks)
-    return max(1, int(partitions))
+    """Number of Spark tasks that run ``n_tasks`` grid tasks.
+
+    ``'auto'`` (or None) -> ``min(n_tasks, defaultParallelism)`` of the
+    active SparkContext: one Spark task per core rather than the
+    reference's one per grid task (see the module docstring for the
+    measured reason). An integer is taken as given; partitions beyond
+    ``n_tasks`` run nothing.
+    """
+    if partitions not in (None, "auto"):
+        return max(1, int(partitions))
+    from pyspark import SparkContext
+
+    active = SparkContext._active_spark_context
+    parallelism = active.defaultParallelism if active is not None else n_tasks
+    return max(1, min(n_tasks, parallelism))
 
 
 def run_tasks(
@@ -66,7 +85,8 @@ def run_tasks(
 
     With no Spark handle, runs serially (reference parity: joblib path).
     With Spark, broadcasts ``shared`` + the task list once and fans out
-    via a task-id DataFrame -> mapInPandas.
+    via a partition-id DataFrame -> mapInPandas, each Spark task running
+    its stride of the grid (see ``parse_partitions``).
     """
     tasks = list(tasks)
     if not tasks:
@@ -75,7 +95,8 @@ def run_tasks(
     if spark is None:
         return [work_fn(t, shared) for t in tasks]
 
-    n_parts = parse_partitions(partitions, len(tasks))
+    n_tasks = len(tasks)
+    n_parts = parse_partitions(partitions, n_tasks)
     # cloudpickle (vendored in pyspark) so closures/lambdas work as work_fn.
     # Register every skdist_spark module for BY-VALUE pickling: python
     # workers then need no skdist_spark on their PYTHONPATH — the code
@@ -94,36 +115,34 @@ def run_tasks(
 
     bc = context.broadcast(cloudpickle.dumps((tasks, shared, work_fn)))
 
-    def _run_batch(batches):
+    def _run_stride(batches):
         import pandas as pd
         from pyspark import cloudpickle as cp
 
         tasks_l, shared_l, fn = pickle.loads(bc.value)
         for pdf in batches:
-            ids = pdf["task_id"].tolist()
+            ids = [
+                i for part in pdf["part_id"].tolist()
+                for i in range(part, n_tasks, n_parts)
+            ]
             # cloudpickle on the worker too: results may hold instances of
             # classes that traveled by value and differ from importables
             payloads = [cp.dumps(fn(tasks_l[i], shared_l)) for i in ids]
             yield pd.DataFrame({"task_id": ids, "payload": payloads})
 
-    # spark.range with an explicit partition count already yields
-    # CONTIGUOUS equal id ranges per partition — the repartitionByRange
-    # this replaces paid a RangePartitioner SAMPLING job plus an
-    # exchange+sort per run_tasks call to produce the same layout
-    task_df = spark.range(0, len(tasks), 1, n_parts).withColumnRenamed(
-        "id", "task_id"
-    )
-    out_rows = task_df.mapInPandas(
-        _run_batch, schema="task_id long, payload binary"
+    # spark.range(n, numPartitions=n) puts exactly one id in each
+    # partition, so partition p holds the row p and runs its stride
+    part_df = spark.range(0, n_parts, 1, n_parts).withColumnRenamed("id", "part_id")
+    out_rows = part_df.mapInPandas(
+        _run_stride, schema="task_id long, payload binary"
     ).collect()
     bc.unpersist()
-    results: list[Any] = [None] * len(tasks)
-    for row in out_rows:
-        results[row["task_id"]] = pickle.loads(bytes(row["payload"]))
-    missing = [i for i, r in enumerate(results) if r is None]
-    if missing:
+    # keyed by task id, not by value: a work_fn may legitimately return None
+    results = {row["task_id"]: pickle.loads(bytes(row["payload"])) for row in out_rows}
+    if len(results) != n_tasks:
+        missing = sorted(set(range(n_tasks)) - results.keys())
         raise RuntimeError(f"distributed tasks lost results for ids {missing[:5]}...")
-    return results
+    return [results[i] for i in range(n_tasks)]
 
 
 def safe_indexing(X, indices):

@@ -1,9 +1,9 @@
-"""Distributed tree ensembles — one Spark task per tree.
+"""Distributed tree ensembles — one grid task per tree.
 
 Reference parity: DistRandomForestClassifier/Regressor,
 DistExtraTreesClassifier/Regressor, DistRandomTreesEmbedding
 (skdist/distribute/ensemble.py:365-716). Each tree trains on broadcast
-data in its own Spark task (bootstrap resample for forests, full
+data in its own grid task (bootstrap resample for forests, full
 sample + random splits for extra-trees), then ships back pickled; the
 ensemble aggregates probabilities/means on the driver at predict time.
 """

@@ -1,7 +1,7 @@
 """Distributed multiclass meta-estimators.
 
 Reference parity: DistOneVsRestClassifier / DistOneVsOneClassifier
-(skdist/distribute/multiclass.py:27) — one Spark task per binary
+(skdist/distribute/multiclass.py:27) — one grid task per binary
 problem (per class for OvR, per class-pair for OvO), training data
 broadcast once. Includes the reference's ``max_negatives`` negative
 down-sampling for OvR and meta-estimator unwrapping (a fitted inner

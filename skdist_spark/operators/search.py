@@ -4,7 +4,8 @@ Reference parity: DistGridSearchCV / DistRandomizedSearchCV /
 DistMultiModelSearch (skdist/distribute/search.py:584,648,717) — same
 constructor surface and fitted attributes (cv_results_, best_params_,
 best_score_, best_estimator_, ...), re-expressed on the task-grid
-engine (one Spark task per candidate×fold, data broadcast once).
+engine (one grid task per candidate×fold, packed one Spark task per
+core, data broadcast once).
 
 Works with any estimator speaking the sklearn protocol — the bundled
 ``skdist_spark.ml`` estimators or real scikit-learn objects.
@@ -231,7 +232,7 @@ class DistBaseSearchCV(BaseEstimator):
 
 
 class DistGridSearchCV(DistBaseSearchCV):
-    """Exhaustive grid search, one Spark task per candidate×fold."""
+    """Exhaustive grid search, one grid task per candidate×fold."""
 
     def __init__(
         self,
@@ -261,7 +262,7 @@ class DistGridSearchCV(DistBaseSearchCV):
 
 
 class DistRandomizedSearchCV(DistBaseSearchCV):
-    """Sampled search, one Spark task per sampled-candidate×fold."""
+    """Sampled search, one grid task per sampled-candidate×fold."""
 
     def __init__(
         self,

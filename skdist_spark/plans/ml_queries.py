@@ -50,7 +50,7 @@ def _load_xy(spark: SparkSession, sf_dir: str):
 
 
 def ml_grid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed grid search: one Spark task per candidate x fold."""
+    """Distributed grid search: one grid task per candidate x fold."""
     _, X, y = _load_xy(spark, sf_dir)
     gs = DistGridSearchCV(
         LogisticRegression(max_iter=80),

@@ -2,6 +2,7 @@
 skdist/distribute/tests/test_search.py, test_multiclass.py,
 test_ensemble.py, test_eliminate.py, test_predict.py)."""
 
+import os
 import pickle
 
 import numpy as np
@@ -215,6 +216,96 @@ def test_feature_eliminator(spark):
     assert m.n_features_ <= 10
     assert m.best_score_ > 0.85
     assert m.predict(X).shape == y.shape
+
+
+def _square_plus(task, shared):
+    return task * task + shared
+
+
+@pytest.mark.parametrize("n_tasks", [2, 11])
+def test_run_tasks_partitions_match_serial(spark, n_tasks):
+    """Every partition count gives the serial sc=None list, in order,
+    also when the grid is smaller than defaultParallelism."""
+    from skdist_spark.operators._engine import run_tasks
+
+    tasks = list(range(n_tasks))
+    serial = run_tasks(None, tasks, _square_plus, shared=3)
+    assert serial == [t * t + 3 for t in tasks]
+    for partitions in ("auto", 1, 3, n_tasks, n_tasks + 5):
+        assert run_tasks(spark, tasks, _square_plus, 3, partitions) == serial, partitions
+
+
+def _partition_id(task, shared):
+    from pyspark import TaskContext
+
+    return TaskContext.get().partitionId()
+
+
+def test_run_tasks_auto_runs_one_spark_task_per_core(spark):
+    """'auto' launches min(n_tasks, defaultParallelism) Spark tasks and
+    partition p runs the grid tasks p, p+n, p+2n, ..."""
+    from skdist_spark.operators._engine import run_tasks
+
+    sc = spark.sparkContext
+    n_parts = sc.defaultParallelism
+    n_tasks = n_parts * 3 + 1
+    group = "test_run_tasks_auto_packing"
+    sc.setJobGroup(group, "run_tasks packing")
+    try:
+        ran_on = run_tasks(spark, list(range(n_tasks)), _partition_id)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    spark_tasks = sum(
+        tracker.getStageInfo(stage).numTasks
+        for job in tracker.getJobIdsForGroup(group)
+        for stage in tracker.getJobInfo(job).stageIds
+    )
+    assert spark_tasks == min(n_tasks, n_parts)
+    assert ran_on == [t % n_parts for t in range(n_tasks)]
+
+
+def test_run_tasks_keeps_none_results(spark):
+    """A work_fn may return None: results are tracked by task id, not
+    by value, so None is not mistaken for a lost result."""
+    from skdist_spark.operators._engine import run_tasks
+
+    def work(task, shared):
+        return None if task % 2 else task
+
+    expected = [None if t % 2 else t for t in range(7)]
+    assert run_tasks(None, range(7), work) == expected
+    assert run_tasks(spark, range(7), work) == expected
+    assert run_tasks(spark, range(3), lambda t, s: None) == [None] * 3
+
+
+def test_by_value_model_scores_without_package(tmp_path):
+    """A fitted model pickled by value (as run_tasks ships it) must
+    score in a process that cannot import skdist_spark."""
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    X, y = _blobs(n=120, d=4, k=3, seed=2)
+    model = LogisticRegression().fit(X, y)
+    for name, mod in list(sys.modules.items()):
+        if name.startswith("skdist_spark") and mod is not None:
+            cloudpickle.register_pickle_by_value(mod)
+    (tmp_path / "model.pkl").write_bytes(cloudpickle.dumps((model, X, y)))
+    script = (
+        "import importlib.util, pathlib, pickle, sys\n"
+        "assert importlib.util.find_spec('skdist_spark') is None, sys.path\n"
+        "model, X, y = pickle.loads(pathlib.Path('model.pkl').read_bytes())\n"
+        "print(model.score(X, y))\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=120,
+    )
+    assert out.returncode == 0, out.stderr
+    assert float(out.stdout) == model.score(X, y)
 
 
 def test_prediction_udf_numpy(spark, data):
