@@ -13,10 +13,15 @@ to Catalyst/AQE, results stream back through Arrow, and the same code
 path works on Spark Connect clusters where raw RDDs are unavailable.
 
 Packing departs from the reference, which runs one Spark task per
-grid task (base.py:53). Each Python Spark task carries a fixed cost of
-tens of milliseconds, far above a small model fit: on a 4-core x86-64
-host (local[4]), 37 no-op tasks took 2.4-2.6 s one per partition and
-0.3 s packed into 4. So ``partitions="auto"`` runs
+grid task (base.py:53). Each Python Spark task carries a fixed cost
+far above a small model fit: on a 4-core x86-64 host (local[4]), 37
+no-op tasks took 2.4-2.6 s one per partition and 0.3 s packed into 4.
+Most of that cost was the stock Python worker re-reading the zip
+directories of pyspark.zip, py4j and the spark-core jar before every
+task (0.21 s of a 0.29 s one-task job on CPython 3.11). Sessions from
+``get_session`` start their workers from ``sources/worker_daemon.py``,
+which makes that re-read lazy; the same job then takes 0.11-0.16 s
+(``tools/worker_overhead.py`` prints both). So ``partitions="auto"`` runs
 ``min(n_tasks, defaultParallelism)`` Spark tasks, and partition ``p``
 runs grid tasks ``p, p+n, p+2n, ...`` (stride, not contiguous blocks,
 so slow candidates of a candidate-major grid spread across cores).
@@ -133,10 +138,14 @@ def run_tasks(
     # spark.range(n, numPartitions=n) puts exactly one id in each
     # partition, so partition p holds the row p and runs its stride
     part_df = spark.range(0, n_parts, 1, n_parts).withColumnRenamed("id", "part_id")
-    out_rows = part_df.mapInPandas(
-        _run_stride, schema="task_id long, payload binary"
-    ).collect()
-    bc.unpersist()
+    try:
+        out_rows = part_df.mapInPandas(
+            _run_stride, schema="task_id long, payload binary"
+        ).collect()
+    finally:
+        # destroy, not unpersist: it also deletes the driver's pickled
+        # copy under the SparkContext temp dir
+        bc.destroy()
     # keyed by task id, not by value: a work_fn may legitimately return None
     results = {row["task_id"]: pickle.loads(bytes(row["payload"])) for row in out_rows}
     if len(results) != n_tasks:

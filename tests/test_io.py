@@ -679,3 +679,104 @@ def test_hilbert_layout_matches_fold_and_prunes(spark, sf_dir):
     assert all(r.max_y - r.min_y <= (1 << 14) for r in rows)
     scanned = sum(1 for r in rows if r.scan_for_x_pred)
     assert scanned * 2 < len(rows), (scanned, len(rows))
+
+
+# pyspark modules a worker does not load to run a task; the first one
+# still unloaded is imported after the caches were invalidated
+_UNLOADED_PYSPARK_MODULES = (
+    "pyspark.streaming.util",
+    "pyspark.resource.profile",
+    "pyspark.sql.avro.functions",
+    "pyspark.mllib.fpm",
+    "pyspark.ml.fpm",
+)
+
+
+def _import_after_invalidate(names):
+    def run(_):
+        import importlib
+        import os
+        import pkgutil
+        import sys
+        import zipimport
+
+        import pyspark
+
+        importlib.invalidate_caches()
+        # pkgutil indexes zipimport's directory cache directly
+        listed = {m.name for m in pkgutil.iter_modules(pyspark.__path__)}
+        loaded = []
+        for name in names:
+            if name not in sys.modules:
+                mod = importlib.import_module(name)
+                loaded.append((name, type(mod.__spec__.loader).__name__))
+                break
+        code = zipimport.zipimporter.invalidate_caches.__code__
+        yield os.path.basename(code.co_filename), loaded, listed
+
+    return run
+
+
+def test_worker_imports_after_invalidate_caches(spark, tmp_path):
+    """The daemon's lazy zipimport invalidation keeps worker imports
+    working: after importlib.invalidate_caches(), pkgutil lists pyspark's
+    sub-packages and an unloaded pyspark submodule imports from
+    pyspark.zip; a zip added with addPyFile mid-session imports in a
+    later task."""
+    import uuid
+    import zipfile
+
+    sc = spark.sparkContext
+    rdd = sc.parallelize([0], 1)
+    [(patched_in, loaded, listed)] = rdd.mapPartitions(
+        _import_after_invalidate(_UNLOADED_PYSPARK_MODULES)
+    ).collect()
+    assert patched_in == "worker_daemon.py"
+    assert [loader for _, loader in loaded] == ["zipimporter"], loaded
+    assert {"sql", "ml", "streaming"} <= listed
+
+    module = f"addpyfile_probe_{uuid.uuid4().hex}"
+    archive = tmp_path / f"{module}.zip"
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr(f"{module}.py", "VALUE = 41 + 1\n")
+    sc.addPyFile(str(archive))
+
+    def use_added(_):
+        import importlib
+
+        yield importlib.import_module(module).VALUE
+
+    assert rdd.mapPartitions(use_added).collect() == [42]
+
+
+def test_get_session_from_foreign_cwd(tmp_path):
+    """A get_session session started from a directory that does not hold
+    the package, with no PYTHONPATH, still runs Python tasks: the worker
+    daemon imports from the executors' PYTHONPATH."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        "import sys\n"
+        f"sys.path.insert(0, {repo!r})\n"
+        "from skdist_spark.sources.session import get_session\n"
+        "spark = get_session('foreign-cwd', cpus=2)\n"
+        "rdd = spark.sparkContext.parallelize([1, 2, 3], 1)\n"
+        "assert rdd.map(lambda x: x * 10).collect() == [10, 20, 30]\n"
+        "def double(batches):\n"
+        "    for pdf in batches:\n"
+        "        yield pdf.assign(id=pdf['id'] * 2)\n"
+        "rows = spark.range(4).mapInPandas(double, 'id long').collect()\n"
+        "assert sorted(r.id for r in rows) == [0, 2, 4, 6]\n"
+        "spark.stop()\n"
+        "print('ok')\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.strip().endswith("ok")

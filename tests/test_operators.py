@@ -279,6 +279,31 @@ def test_run_tasks_keeps_none_results(spark):
     assert run_tasks(spark, range(3), lambda t, s: None) == [None] * 3
 
 
+def _raise_on_three(task, shared):
+    if task == 3:
+        raise ValueError("task 3 fails")
+    return task
+
+
+def test_run_tasks_releases_broadcast(spark):
+    """run_tasks deletes the driver's pickled broadcast file, also when
+    a task raises."""
+    from skdist_spark.operators._engine import run_tasks
+
+    temp_dir = spark.sparkContext._temp_dir
+    before = sorted(os.listdir(temp_dir))
+    shared = np.zeros(100_000)
+    for _ in range(3):
+        assert run_tasks(spark, range(5), _square_plus, shared=1) == [
+            t * t + 1 for t in range(5)
+        ]
+        run_tasks(spark, range(2), lambda t, s: s.shape, shared=shared)
+    assert sorted(os.listdir(temp_dir)) == before
+    with pytest.raises(Exception, match="task 3 fails"):
+        run_tasks(spark, range(5), _raise_on_three, shared=shared)
+    assert sorted(os.listdir(temp_dir)) == before
+
+
 def test_by_value_model_scores_without_package(tmp_path):
     """A fitted model pickled by value (as run_tasks ships it) must
     score in a process that cannot import skdist_spark."""
